@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark harness: runs every declared query against
   * SPARK_GRAFT_SF_DIR and prints one JSON line with per-query and
   * total wall seconds. Each query executes its FULL plan through the
@@ -12,17 +10,8 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .withExtensions(new GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.warehouse.dir", "/root/repo/target/warehouse")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val cpus = GraftSession.envCpus
+    val spark = GraftSession.local(cpus, Some("ERROR"))
     // JVM/codegen warm-up on the smallest sf so per-query times
     // measure the engine, not first-call class loading.
     try SparkEntry.entry(spark).write.format("noop").mode("overwrite").save()
@@ -50,7 +39,7 @@ object Bench {
       val t0 = System.nanoTime()
       // modulo keeps the ANSI sum far from Long overflow; the work
       // is the 400M xxhash64 evaluations
-      spark.range(0, 400000000L, 1, cpus.toInt)
+      spark.range(0, 400000000L, 1, cpus)
         .selectExpr("sum(xxhash64(id, id * 7919) % 1000000) as h")
         .write.format("noop").mode("overwrite").save()
       (System.nanoTime() - t0) / 1e9

@@ -126,9 +126,6 @@ object Dedup extends QueryModule {
     * shingle rows (no array reshaping) — shared by the batch and
     * streaming candidate generators.
     */
-  private[graft] def devVerifyPairs(s: SparkSession, candidates: DataFrame,
-      shingles: DataFrame): DataFrame = verifyPairs(s, candidates, shingles)
-
   private def verifyPairs(s: SparkSession, candidates: DataFrame,
       shingles: DataFrame): DataFrame = {
     import s.implicits._

@@ -539,7 +539,7 @@ object Knn extends QueryModule {
   // would have silently computed the wrong geometry (and the oracle,
   // sharing the conflation, would still have matched).
   private val PqSubDim = PqDim / PqM
-  private val PqCodes = 16 // codebook entries per subspace
+  private[graft] val PqCodes = 16 // codebook entries per subspace
 
   /** Product-quantization ANN (Jégou/Douze/Schmid, TPAMI'11): 64-dim
     * vectors split into 8 subspaces of 8 dims; per-subspace codebooks
@@ -707,19 +707,28 @@ object Knn extends QueryModule {
   }
 
   /** Per-(vector, subspace) argmin over the distance rows as ONE
-    * hash aggregate: (dl, c) packed into a single long — dl ≤ ~3·10¹⁶
-    * here (≤ PqSubDim · q15(maxΔ²) ≈ 8·4·10¹⁵), c < PqCodes, so
-    * dl·PqCodes + c stays far under 2⁶³ and min(packed) IS the
-    * lexicographic (dist, c) minimum the former rank-1 window
-    * computed (both non-negative). The aggregate's long buffer gets
+    * hash aggregate: (dl, c) packed into a single long. With c <
+    * PqCodes and dl ≤ (Long.MaxValue − PqCodes) / PqCodes, dl·PqCodes
+    * + c cannot wrap, and min(packed) IS the lexicographic (dist, c)
+    * minimum the former rank-1 window computed (both non-negative).
+    * The bound is data-dependent (dl is the unscaled q15 distance:
+    * the fixture's ≈3·10¹⁶ fits, a subspace distance past ≈576 does
+    * not), so a row above it fails the job through `raise_error` in
+    * the aggregate's own input instead of wrapping negative into a
+    * wrong code — no extra pass. The aggregate's long buffer gets
     * map-side partial min + whole-stage codegen, where the window
     * paid a full-width shuffle + sort per pass — and a decimal or
     * struct form would demote to SortAggregate (round-10 item 9).
     */
-  private def pqArgmin(s: SparkSession, dists: DataFrame): DataFrame = {
+  private[graft] def pqArgmin(s: SparkSession,
+      dists: DataFrame): DataFrame = {
     import s.implicits._
+    val bound = (Long.MaxValue - PqCodes) / PqCodes
     dists.groupBy($"vec_id", $"m")
-      .agg(min($"dl" * PqCodes + $"c").as("pk"))
+      .agg(min(when($"dl" > bound, raise_error(lit(
+        s"pqArgmin: a subspace distance exceeds $bound (unscaled q15), " +
+          s"so dl * $PqCodes + c would overflow a long")))
+        .otherwise($"dl" * PqCodes + $"c")).as("pk"))
       .select($"vec_id", $"m", ($"pk" % PqCodes).as("c"))
   }
 

@@ -969,12 +969,8 @@ private[sources] final class GraftBatchWrite(
           Some(commitDir))
       case GraftCommitMode.ReplaceGroups(op) =>
         val scanned = op.scannedFiles.toSet
-        val untouched = op.allFiles.filterNot(scanned)
-        store.publishManifest(fs, new Path(path), n,
-          untouched ++
-            store.carriedMetaLines(path, op.version, untouched) ++
-            freshEntries,
-          Some(commitDir))
+        store.publishRewrite(path, op.version,
+          op.allFiles.filterNot(scanned), freshEntries, commitDir): Unit
     }
   }
 

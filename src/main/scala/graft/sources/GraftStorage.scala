@@ -1010,7 +1010,6 @@ final case class GraftStorage(
       mapping: Option[(Map[String, String], Seq[String])],
       statsCols: Seq[String], bloomCols: Seq[String],
       checkMorKey: Boolean): (Seq[String], Seq[String]) = {
-    import org.apache.hadoop.fs.Path
     // v2 committer — same safety argument as writeCommitData: the
     // version-private dir only becomes visible via the manifest
     toWrite.write.mode("overwrite")
@@ -1026,22 +1025,11 @@ final case class GraftStorage(
           c.stripPrefix(GraftStorage.TokenBloomPrefix), mapping)
       else physicalNameOf(c, mapping)
     }
-    val stats: Seq[String] =
-      if (statsColsP.isEmpty) Seq.empty
-      else {
-        buildZoneMap(commitDir.toString, statsColsP)
-        Seq(s"S\t${new Path(commitDir, "_zonemap").toUri.getPath}")
-      }
-    val blooms: Seq[String] =
-      if (bloomColsP.isEmpty) Seq.empty
-      else {
-        buildBloomIndex(commitDir.toString, bloomColsP)
-        Seq(s"B\t${new Path(commitDir, "_bloom").toUri.getPath}")
-      }
+    val sidecars = sidecarLines(commitDir, statsColsP, bloomColsP)
     val freshFiles = fs.listStatus(commitDir).toSeq
       .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
       .map(_.getPath.toUri.getPath)
-    (freshFiles, stats ++ blooms)
+    (freshFiles, sidecars)
   }
 
   /** writeVersioned with MANIFEST-LEVEL DATA SKIPPING: `statsCols`
@@ -1174,7 +1162,7 @@ final case class GraftStorage(
       checkMorKey = morKey.isEmpty)
     // MoR upsert: the commit's own keys become a DV over everything
     // OLDER (D lines precede the fresh file lines — sequence rule)
-    val dvLines: Seq[String] = morKeyP match {
+    val dvs: Seq[String] = morKeyP match {
       case Some(k) =>
         val dvDir = new Path(commitDir, "_dv")
         // keys re-read from the COMMITTED files, not the input plan:
@@ -1191,12 +1179,8 @@ final case class GraftStorage(
               "key-based deletion vector cannot delete the old copy; " +
               "route NULL-keyed rows through mergeVersioned")
         }
-        val dvStatus = fs.listStatus(dvDir).toSeq
-          .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
-        requireDvSmall(dvStatus.map(_.getLen).sum,
-          { fs.delete(commitDir, true); () },
-          "mergeVersionedMor", "mergeVersioned (copy-on-write)")
-        dvStatus.map(f => s"D\t$k\t${f.getPath.toUri.getPath}")
+        dvLines(fs, dvDir, commitDir, k, "mergeVersionedMor",
+          "mergeVersioned (copy-on-write)")
       case None => Seq.empty
     }
     val order = GraftStorage.oLine(sortedByP, append,
@@ -1205,7 +1189,7 @@ final case class GraftStorage(
     // readers merge H lines by name instead of opening footers. The
     // json is one line for any schema our writers produce (Spark's
     // DataType.json emits no newlines).
-    val fresh = dvLines ++ freshFiles ++ sidecarLines ++ order ++
+    val fresh = dvs ++ freshFiles ++ sidecarLines ++ order ++
       txn.map(t => s"T\t${t._1}\t${t._2}").toSeq ++ carryLines ++
       rowCountLines(freshFiles) ++ Seq(s"H\t${dfP.schema.json}")
     // append inherits the RAW prior entries via a LOG-STRUCTURED
@@ -2656,6 +2640,80 @@ final case class GraftStorage(
         (e.startsWith("R\t") && untouchedSet(e.split('\t')(2))))
   }
 
+  /** `S`/`B` manifest lines for a commit's own files: builds the
+    * `_zonemap` / `_bloom` sidecars inside `commitDir` over
+    * `statsCols` / `bloomCols` (physical names). The one sidecar step
+    * of every commit — appends, scoped compaction, delete
+    * application and the SQL merge-on-read DML.
+    */
+  private[sources] def sidecarLines(commitDir: org.apache.hadoop.fs.Path,
+      statsCols: Seq[String], bloomCols: Seq[String]): Seq[String] = {
+    import org.apache.hadoop.fs.Path
+    val stats =
+      if (statsCols.isEmpty) Seq.empty
+      else {
+        buildZoneMap(commitDir.toString, statsCols)
+        Seq(s"S\t${new Path(commitDir, "_zonemap").toUri.getPath}")
+      }
+    val blooms =
+      if (bloomCols.isEmpty) Seq.empty
+      else {
+        buildBloomIndex(commitDir.toString, bloomCols)
+        Seq(s"B\t${new Path(commitDir, "_bloom").toUri.getPath}")
+      }
+    stats ++ blooms
+  }
+
+  /** Publish a copy-on-write rewrite of version `base` as version
+    * `base + 1`: the untouched files, their carried metadata
+    * ([[carriedMetaLines]]), then the commit's own lines (fresh
+    * files, their `R` lines, any sidecar/sort/schema lines). The
+    * one publish of every rewriting commit — Scala DELETE/UPDATE,
+    * MERGE, scoped compaction, delete application and the SQL
+    * copy-on-write DML. A refused or lost publish removes `commitDir`.
+    */
+  private[sources] def publishRewrite(path: String, base: Long,
+      untouched: Seq[String], freshLines: Seq[String],
+      commitDir: org.apache.hadoop.fs.Path): Long = {
+    val dir = new org.apache.hadoop.fs.Path(path)
+    publishManifest(dir.getFileSystem(spark.sparkContext.hadoopConfiguration),
+      dir, base + 1,
+      untouched ++ carriedMetaLines(path, base, untouched) ++ freshLines,
+      Some(commitDir))
+    base + 1
+  }
+
+  /** Write `rows` (if any) as the fresh files of a copy-on-write
+    * rewrite of version `base` — layout-keyed under the snapshot's
+    * partition spec, physical names per `mapping`, constraint-checked
+    * — and publish them beside the `untouched` files with their row
+    * counts, sidecars over `statsCols`/`bloomCols`, and the `O` line
+    * of a re-enforced `sortCols` claim. Returns the new version.
+    */
+  private def commitRewrite(path: String, base: Long,
+      untouched: Seq[String], rows: Option[DataFrame],
+      mapping: Option[(Map[String, String], Seq[String])],
+      statsCols: Seq[String] = Seq.empty,
+      bloomCols: Seq[String] = Seq.empty,
+      sortCols: Seq[String] = Seq.empty): Long = {
+    val dir = new org.apache.hadoop.fs.Path(path)
+    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val commitDir = newCommitDir(dir, base + 1)
+    val fresh = rows.fold(Seq.empty[String]) { df =>
+      val out = writeCommitData(df, commitDir, partitionSpec(path, base),
+        fs, mapping)
+      validateCommitFiles(path, out, commitDir, fs)
+      out
+    }
+    val sidecars =
+      if (fresh.isEmpty) Seq.empty
+      else sidecarLines(commitDir, statsCols, bloomCols)
+    publishRewrite(path, base, untouched,
+      fresh ++ rowCountLines(fresh) ++ sidecars ++
+        GraftStorage.oLine(sortCols, append = false, Seq.empty),
+      commitDir)
+  }
+
   /** WRITE-AUDIT-PUBLISH gate: while the log HEAD is audit-pending
     * (its manifest carries a `W` line from [[wapStage]]), the only
     * legal next commits are further stages (their lines carry `W`
@@ -3217,9 +3275,6 @@ final case class GraftStorage(
   def compactVersionedWhere(path: String, predicate: Column,
       targetFiles: Int = 1): Long = {
     import org.apache.hadoop.fs.Path
-    val conf = spark.sparkContext.hadoopConfiguration
-    val dir = new Path(path)
-    val fs = dir.getFileSystem(conf)
     require(listVersions(path).nonEmpty,
       s"no versions committed under $path")
     materializeIfMor(path)
@@ -3260,29 +3315,10 @@ final case class GraftStorage(
       if (sortCols.isEmpty) clustered
       else clustered.sortWithinPartitions(
         (specKeys ++ sortCols.map(col)): _*)
-    val n = vs.last + 1
-    val commitDir = newCommitDir(dir, n)
-    val fresh = writeCommitData(relaid, commitDir, spec, fs,
-      columnMapping(path, vs.last))
-    validateCommitFiles(path, fresh, commitDir, fs)
-    val stats: Seq[String] =
-      if (sc.isEmpty) Seq.empty
-      else {
-        buildZoneMap(commitDir.toString, sc)
-        Seq(s"S\t${new Path(commitDir, "_zonemap").toUri.getPath}")
-      }
-    val blooms: Seq[String] =
-      if (bc.isEmpty) Seq.empty
-      else {
-        buildBloomIndex(commitDir.toString, bc)
-        Seq(s"B\t${new Path(commitDir, "_bloom").toUri.getPath}")
-      }
-    val meta = carriedMetaLines(path, vs.last, untouched) ++
-      rowCountLines(fresh) ++ stats ++ blooms ++
-      GraftStorage.oLine(sortCols, append = false, Seq.empty)
-    publishManifest(fs, dir, n, untouched ++ fresh ++ meta,
-      Some(commitDir))
-    tagMaintenance(path, n, "compact_where")
+    tagMaintenance(path,
+      commitRewrite(path, vs.last, untouched, Some(relaid),
+        columnMapping(path, vs.last), sc, bc, sortCols),
+      "compact_where")
   }
 
   /** REORG APPLY DELETES at O(affected files) — the scoped MoR
@@ -3389,12 +3425,11 @@ final case class GraftStorage(
       }
     }
 
-    val n = v + 1
     if (affected.isEmpty) {
       // DVs deleted nothing that still exists — fold them away as a
       // metadata-only commit (O(delta): one X drop-prefix replays)
-      publishManifestDelta(fs, dir, n, Seq("D\t"), Seq.empty, None)
-      return tagMaintenance(path, n, "apply_deletes")
+      publishManifestDelta(fs, dir, v + 1, Seq("D\t"), Seq.empty, None)
+      return tagMaintenance(path, v + 1, "apply_deletes")
     }
 
     // ---- 2. rewrite exactly the affected files, per sequence group
@@ -3429,39 +3464,16 @@ final case class GraftStorage(
       if (sortCols.isEmpty) survivors
       else survivors.sortWithinPartitions(
         (specKeys ++ sortCols.map(col)): _*)
-    val commitDir = newCommitDir(dir, n)
-    val fresh = writeCommitData(relaid, commitDir, spec, fs)
-    validateCommitFiles(path, fresh, commitDir, fs)
-    val stats: Seq[String] =
-      if (sc.isEmpty || fresh.isEmpty) Seq.empty
-      else {
-        buildZoneMap(commitDir.toString, sc)
-        Seq(s"S\t${new Path(commitDir, "_zonemap").toUri.getPath}")
-      }
-    val blooms: Seq[String] =
-      if (bc.isEmpty || fresh.isEmpty) Seq.empty
-      else {
-        buildBloomIndex(commitDir.toString, bc)
-        Seq(s"B\t${new Path(commitDir, "_bloom").toUri.getPath}")
-      }
 
     // ---- 3. publish: no D line survives; untouched files carry
     val untouched = orderedFiles.map(_._1)
       .filterNot(f => affected(key(f)))
-    val meta = carriedMetaLines(path, v, untouched) ++
-      rowCountLines(fresh) ++ stats ++ blooms ++
-      GraftStorage.oLine(sortCols, append = false, Seq.empty)
-    publishManifest(fs, dir, n, untouched ++ fresh ++ meta,
-      Some(commitDir))
-    tagMaintenance(path, n, "apply_deletes")
+    tagMaintenance(path,
+      commitRewrite(path, v, untouched, Some(relaid), None, sc, bc,
+        sortCols),
+      "apply_deletes")
   }
 
-  /** Columns the CURRENT snapshot's stats-in-log / bloom-in-log
-    * sidecars cover — maintenance rewrites (compact, z-order) must
-    * carry this coverage forward, or the op that is advertised to
-    * IMPROVE scans silently turns off file pruning and the
-    * manifest-rate aggregate path from its commit on.
-    */
   /** Columns the version's REAL sidecars (S/B manifest lines) cover —
     * unlike [[priorSidecarCoverage]] this excludes the path-derived
     * partition-key zones, so a PARTIAL rewrite restates exactly what
@@ -3485,6 +3497,12 @@ final case class GraftStorage(
     (sc, bc)
   }
 
+  /** Columns the CURRENT snapshot's stats-in-log / bloom-in-log
+    * sidecars cover — maintenance rewrites (compact, z-order) must
+    * carry this coverage forward, or the op that is advertised to
+    * IMPROVE scans silently turns off file pruning and the
+    * manifest-rate aggregate path from its commit on.
+    */
   private[sources] def priorSidecarCoverage(
       path: String): (Seq[String], Seq[String]) =
     listVersions(path).lastOption match {
@@ -3500,39 +3518,6 @@ final case class GraftStorage(
         (stats, blooms)
     }
 
-  /** ZERO-COPY shallow clone (the CLONE TABLE of the lakehouse
-    * engines): publish the source snapshot's manifest as the target's
-    * v0 — no data bytes move at ANY table size; the clone is KBs of
-    * metadata referencing the source's immutable files. Because
-    * commits only ever ADD `data/c<N>` dirs under their own table,
-    * later writes to the clone land in the CLONE's directories and
-    * the two tables diverge independently — a 100 TB dev/test fork
-    * for free. Lifecycle caveat (same as Delta shallow clones):
-    * `vacuumVersioned` on the SOURCE can drop files a clone still
-    * references, so retention policy must span clones. Returns the
-    * clone's version (always 0).
-    */
-  /** RESTORE TABLE TO VERSION — rollback as a NEW commit: republish
-    * version `v`'s manifest entries as version N+1. Metadata-only (no
-    * data bytes move; the restored files are immutable and still on
-    * disk), history is preserved (the bad versions stay time-
-    * travelable until vacuum), and readers of the latest snapshot
-    * simply see the old content — the Delta RESTORE contract.
-    * Refuses to restore past vacuumed history (manifest resolve fails
-    * fast). Returns the new version number.
-    */
-  /** ALTER TABLE ADD COLUMNS as a METADATA-ONLY commit: version N+1
-    * carries every prior entry verbatim plus one `H` schema line with
-    * the added columns — zero data bytes move at any table size, and
-    * readers of the new snapshot surface the columns as NULL for
-    * every existing file (the schema-in-log merge that already
-    * serves append-time evolution). Added columns must be nullable
-    * (there is no data to backfill) and must not collide with
-    * existing names (same-name/same-type would silently no-op,
-    * same-name/other-type would poison the log — both rejected
-    * here, BEFORE the publish, by the mergeSchemaJsons gate plus an
-    * explicit name check). Returns the new version.
-    */
   // ------------- COLUMN MAPPING (RENAME / DROP COLUMN) -------------
   //
   // Data files are immutable, so a rename cannot touch them: instead
@@ -3897,6 +3882,15 @@ final case class GraftStorage(
     n
   }
 
+  /** RESTORE TABLE TO VERSION — rollback as a NEW commit: republish
+    * version `v`'s manifest entries as version N+1. Metadata-only (no
+    * data bytes move; the restored files are immutable and still on
+    * disk), history is preserved (the bad versions stay time-
+    * travelable until vacuum), and readers of the latest snapshot
+    * simply see the old content — the Delta RESTORE contract.
+    * Refuses to restore past vacuumed history (manifest resolve fails
+    * fast). Returns the new version number.
+    */
   def restoreVersioned(path: String, toVersion: Long): Long = {
     import org.apache.hadoop.fs.Path
     val vs = listVersions(path)
@@ -3938,6 +3932,18 @@ final case class GraftStorage(
       .toDF("version", "committed_at", "n_files", "n_rows")
   }
 
+  /** ZERO-COPY shallow clone (the CLONE TABLE of the lakehouse
+    * engines): publish the source snapshot's manifest as the target's
+    * v0 — no data bytes move at ANY table size; the clone is KBs of
+    * metadata referencing the source's immutable files. Because
+    * commits only ever ADD `data/c<N>` dirs under their own table,
+    * later writes to the clone land in the CLONE's directories and
+    * the two tables diverge independently — a 100 TB dev/test fork
+    * for free. Lifecycle caveat (same as Delta shallow clones):
+    * `vacuumVersioned` on the SOURCE can drop files a clone still
+    * references, so retention policy must span clones. Returns the
+    * clone's version (always 0).
+    */
   def cloneVersioned(src: String, dst: String,
       version: Option[Long] = None): Long = {
     import org.apache.hadoop.fs.Path
@@ -4197,32 +4203,79 @@ final case class GraftStorage(
           "key-based deletion vector cannot express them; use the " +
           "copy-on-write deleteVersioned for NULL-keyed victims")
     }
-    val dvStatus = fs.listStatus(commitDir).toSeq
-      .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
-    requireDvSmall(dvStatus.map(_.getLen).sum,
-      { fs.delete(commitDir, true); () },
-      what, "deleteVersioned (copy-on-write)")
-    val dvFiles = dvStatus.map(_.getPath.toUri.getPath)
-    val path = dir.toString
-    val base = n - 1
     // a MoR delete is the purest delta commit: inherit everything,
-    // add only the DV lines — O(deleted keys) metadata AND data.
-    // NO cleanup handle rides the publish: a lost put-if-absent race
-    // must leave the staged DV intact for the rebase retry (cleanup
-    // here happens on terminal failure only).
+    // add only the DV lines — O(deleted keys) metadata AND data
+    publishRebasing(dir.toString, n - 1, commitDir,
+      txn.map(t => s"T\t${t._1}\t").toSeq,
+      dvLines(fs, commitDir, commitDir, keyCol, what,
+        "deleteVersioned (copy-on-write)") ++
+        txn.map(t => s"T\t${t._1}\t${t._2}").toSeq,
+      what)
+  }
+
+  /** `D` manifest lines for the deletion-vector parquet staged in
+    * `dvDir`, after guarding the 'DVs are broadcast-sized by
+    * construction' invariant every MoR read plan relies on: a
+    * deletion vector over the `spark.graft.mor.maxDvBytes` ceiling
+    * (default 64 MB) would make EVERY subsequent read broadcast it —
+    * refuse at write time (removing the staged `commitDir` first) and
+    * point at `alt`, the copy-on-write route, which is the right plan
+    * for deletes/upserts that big anyway.
+    */
+  private[sources] def dvLines(fs: org.apache.hadoop.fs.FileSystem,
+      dvDir: org.apache.hadoop.fs.Path,
+      commitDir: org.apache.hadoop.fs.Path, keyCol: String,
+      what: String, alt: String): Seq[String] = {
+    val dvStatus = fs.listStatus(dvDir).toSeq
+      .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
+    val dvBytes = dvStatus.map(_.getLen).sum
+    val max = spark.conf.getOption("spark.graft.mor.maxDvBytes")
+      .map(_.toLong).getOrElse(64L << 20)
+    if (dvBytes > max) {
+      fs.delete(commitDir, true)
+      throw new DvTooLargeException(dvBytes, max,
+        s"$what: the deletion vector is $dvBytes bytes, over the " +
+          s"spark.graft.mor.maxDvBytes ceiling of $max — every read " +
+          s"would broadcast it; use $alt for changes this large " +
+          "(or raise the ceiling)")
+    }
+    dvStatus.map(f => s"D\t$keyCol\t${f.getPath.toUri.getPath}")
+  }
+
+  /** Publish a staged delta commit (`removals`/`additions`, see
+    * [[publishManifestDelta]]) planned against version `base`, with
+    * OPTIMISTIC REBASE-AND-RETRY: a table that advanced past `base`
+    * does not abort outright — if every interleaved commit is a
+    * disjoint append ([[validateDisjointRebase]], checked against
+    * the keys the commit's key-based `D` lines delete; position DVs
+    * bind to explicit files, so appends never overlap them) the
+    * delta replays verbatim on the new head: the DV still targets
+    * exactly the same old copies (interleaved files land BEFORE its
+    * D lines — the sequence rule) and the fresh files are new either
+    * way. True conflicts abort loudly. NO cleanup handle rides the
+    * publish: a lost put-if-absent race must leave the staged files
+    * intact for the retry — `commitDir` is removed only on terminal
+    * failure. Returns the PUBLISHED version. Shared by the DV-only
+    * delete hooks and the SQL merge-on-read DML.
+    */
+  private[sources] def publishRebasing(path: String, base: Long,
+      commitDir: org.apache.hadoop.fs.Path, removals: Seq[String],
+      additions: Seq[String], what: String): Long = {
+    val dir = new org.apache.hadoop.fs.Path(path)
+    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val dvs = additions.collect {
+      case e if e.startsWith("D\t") => e.split('\t')
+    }
+    val deletedKeys = dvs.headOption.map(_(1))
+      .filter(_ != GraftStorage.PosDvCol).map(k => k -> dvs.map(_(2)))
     var attempt = 0
     while (true) {
       val head = listVersions(path).last
       if (head != base)
-        try validateDisjointRebase(path, base, head,
-          if (keyCol == GraftStorage.PosDvCol) None
-          else Some(keyCol -> dvFiles), what)
+        try validateDisjointRebase(path, base, head, deletedKeys, what)
         catch { case e: Throwable => fs.delete(commitDir, true); throw e }
       try {
-        publishManifestDelta(fs, dir, head + 1,
-          txn.map(t => s"T\t${t._1}\t").toSeq,
-          dvFiles.map(f => s"D\t$keyCol\t$f") ++
-            txn.map(t => s"T\t${t._1}\t${t._2}").toSeq, None)
+        publishManifestDelta(fs, dir, head + 1, removals, additions, None)
         return head + 1
       } catch {
         case e: java.util.ConcurrentModificationException =>
@@ -4233,28 +4286,6 @@ final case class GraftStorage(
       }
     }
     -1L // unreachable
-  }
-
-  /** Guard the 'DVs are broadcast-sized by construction' invariant
-    * every MoR read plan relies on: a deletion vector over the
-    * `spark.graft.mor.maxDvBytes` ceiling (default 64 MB) would make
-    * EVERY subsequent read broadcast it — refuse at write time (the
-    * cleanup thunk removes the staged commit first) and point at the
-    * copy-on-write route, which is the right plan for deletes/upserts
-    * that big anyway.
-    */
-  private[sources] def requireDvSmall(dvBytes: Long, cleanup: => Unit,
-      what: String, alt: String): Unit = {
-    val max = spark.conf.getOption("spark.graft.mor.maxDvBytes")
-      .map(_.toLong).getOrElse(64L << 20)
-    if (dvBytes > max) {
-      cleanup
-      throw new DvTooLargeException(dvBytes, max,
-        s"$what: the deletion vector is $dvBytes bytes, over the " +
-          s"spark.graft.mor.maxDvBytes ceiling of $max — every read " +
-          s"would broadcast it; use $alt for changes this large " +
-          "(or raise the ceiling)")
-    }
   }
 
   /** MERGE-ON-READ upsert — MERGE at O(delta) write cost: ONE commit
@@ -4356,9 +4387,6 @@ final case class GraftStorage(
   def mergeVersioned(path: String, updates: DataFrame,
       key: String): Long = {
     import org.apache.hadoop.fs.Path
-    val conf = spark.sparkContext.hadoopConfiguration
-    val dir = new Path(path)
-    val fs = dir.getFileSystem(conf)
     require(listVersions(path).nonEmpty,
       s"no versions committed under $path")
     materializeIfMor(path) // file-wise machinery reads raw files
@@ -4375,8 +4403,6 @@ final case class GraftStorage(
     val affectedKeys = cur.join(upd.select(col(key)), Seq(key), "left_semi")
       .select(input_file_name()).distinct()
       .collect().map(r => keyOf(r.getString(0))).toSet
-    val n: Long = vs.last + 1
-    val commitDir = newCommitDir(dir, n)
     val (affected, untouched) = files.partition(f => affectedKeys(keyOf(f)))
     // rewritten affected files: updates win on key, others carried;
     // plus the pure inserts (keys unseen anywhere in the snapshot)
@@ -4389,15 +4415,9 @@ final case class GraftStorage(
       .select(cur.columns.map(col).toIndexedSeq: _*)
     val inserts = upd.join(cur.select(col(key)), Seq(key), "left_anti")
       .select(cur.columns.map(col).toIndexedSeq: _*)
-    val fresh = writeCommitData(
-      survivors.unionByName(matched).unionByName(inserts), commitDir,
-      partitionSpec(path, vs.last), fs, columnMapping(path, vs.last))
-    validateCommitFiles(path, fresh, commitDir, fs)
-    val meta = carriedMetaLines(path, vs.last, untouched) ++
-      rowCountLines(fresh)
-    publishManifest(fs, dir, n, untouched ++ fresh ++ meta,
-      Some(commitDir))
-    n
+    commitRewrite(path, vs.last, untouched,
+      Some(survivors.unionByName(matched).unionByName(inserts)),
+      columnMapping(path, vs.last))
   }
 
   /** CDC — row-level changes between two committed versions, computed
@@ -4745,11 +4765,6 @@ final case class GraftStorage(
       .option("readChangeFeed", changeFeed.toString)
       .load(path)
 
-  /** Shared copy-on-write core: split the latest snapshot's file list
-    * into affected (contain rows matching `predicate`) and untouched;
-    * rewrite only the affected files via `rewrite`; publish a new
-    * manifest of untouched ++ fresh files.
-    */
   /** If the latest version carries merge-on-read deletion vectors,
     * publish a clean copy-on-write commit first (REORG APPLY
     * DELETES): the file-wise rewrite machinery below reads raw files
@@ -4763,12 +4778,14 @@ final case class GraftStorage(
     }
   }
 
+  /** Shared copy-on-write core: split the latest snapshot's file list
+    * into affected (contain rows matching `predicate`) and untouched;
+    * rewrite only the affected files via `rewrite`; publish a new
+    * manifest of untouched ++ fresh files.
+    */
   private def rewriteVersioned(path: String, predicate: Column,
       rewrite: DataFrame => DataFrame): Long = {
     import org.apache.hadoop.fs.Path
-    val conf = spark.sparkContext.hadoopConfiguration
-    val dir = new Path(path)
-    val fs = dir.getFileSystem(conf)
     val vs0 = listVersions(path)
     require(vs0.nonEmpty, s"no versions committed under $path")
     materializeIfMor(path)
@@ -4780,23 +4797,11 @@ final case class GraftStorage(
     val affectedKeys = cur.filter(predicate)
       .select(input_file_name()).distinct()
       .collect().map(r => key(r.getString(0))).toSet
-    val n: Long = vs.last + 1
-    val commitDir = newCommitDir(dir, n)
     val (affected, untouched) = files.partition(f => affectedKeys(key(f)))
-    val fresh: Seq[String] =
-      if (affected.isEmpty) Seq.empty
-      else {
-        val out = writeCommitData(
-          rewrite(readRawFiles(path, vs.last, affected)), commitDir,
-          partitionSpec(path, vs.last), fs, columnMapping(path, vs.last))
-        validateCommitFiles(path, out, commitDir, fs)
-        out
-      }
-    val meta = carriedMetaLines(path, vs.last, untouched) ++
-      rowCountLines(fresh)
-    publishManifest(fs, dir, n, untouched ++ fresh ++ meta,
-      Some(commitDir))
-    n
+    commitRewrite(path, vs.last, untouched,
+      if (affected.isEmpty) None
+      else Some(rewrite(readRawFiles(path, vs.last, affected))),
+      columnMapping(path, vs.last))
   }
 
   /** Time-travel read: the file set of `version` (default: latest).

@@ -444,6 +444,18 @@ private[sources] final class GraftMicroBatchStream(
     }
   }
 
+  /** (start, end) → materialized batch files. Spark plans one
+    * micro-batch SEVERAL times (measured 4× per batch: logical +
+    * physical planning, then execution); the batch content is
+    * deterministic and write-once, so repeat calls must not rebuild
+    * the change plan (~0.15 s of driver analysis each) or re-list
+    * the dir. Entries for committed ranges go stale after
+    * [[cleanSpentCdfDirs]] retires their dirs — harmless, committed
+    * ranges never replan.
+    */
+  private val cdfBatchFiles =
+    new java.util.concurrent.ConcurrentHashMap[(Long, Long), Seq[String]]()
+
   /** CHANGE-FEED batch (readChangeFeed=true): instead of the added
     * FILES, the batch delivers the range's CHANGE ROWS — per
     * published commit step, [[GraftStorage.changesVersioned]]'s
@@ -461,25 +473,6 @@ private[sources] final class GraftMicroBatchStream(
     * diff when vacuum retired an interior manifest.
     */
   private def changeRows(start: Long, end: Long): Seq[String] = {
-    val __t0 = System.nanoTime()
-    try changeRows0(start, end)
-    finally if (sys.env.contains("GRAFT_STREAM_TIMING"))
-      System.err.println(f"[gs] changeRows ${(System.nanoTime() - __t0) / 1e9}%7.3f s ($start -> $end)")
-  }
-
-  /** (start, end) → materialized batch files. Spark plans one
-    * micro-batch SEVERAL times (measured 4× per batch: logical +
-    * physical planning, then execution); the batch content is
-    * deterministic and write-once, so repeat calls must not rebuild
-    * the change plan (~0.15 s of driver analysis each) or re-list
-    * the dir. Entries for committed ranges go stale after
-    * [[cleanSpentCdfDirs]] retires their dirs — harmless, committed
-    * ranges never replan.
-    */
-  private val cdfBatchFiles =
-    new java.util.concurrent.ConcurrentHashMap[(Long, Long), Seq[String]]()
-
-  private def changeRows0(start: Long, end: Long): Seq[String] = {
     import org.apache.spark.sql.functions.lit
     val memo = cdfBatchFiles.get((start, end))
     if (memo != null) return memo
@@ -849,14 +842,6 @@ private[sources] final class GraftMicroBatchStream(
     }
 
   override def planInputPartitions(start: Offset, end: Offset)
-      : Array[InputPartition] = {
-    val __t0 = System.nanoTime()
-    try planInputPartitions0(start, end)
-    finally if (sys.env.contains("GRAFT_STREAM_TIMING"))
-      System.err.println(f"[gs] planInputPartitions ${(System.nanoTime() - __t0) / 1e9}%7.3f s ($start -> $end)")
-  }
-
-  private def planInputPartitions0(start: Offset, end: Offset)
       : Array[InputPartition] = {
     val so = start.asInstanceOf[VOffset]
     val eo = end.asInstanceOf[VOffset]

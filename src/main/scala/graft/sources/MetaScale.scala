@@ -1,7 +1,6 @@
 package graft.sources
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Metadata-layer scale measurement (BASELINE.md sf10 table): builds
@@ -17,12 +16,7 @@ import org.apache.spark.sql.functions._
 object MetaScale {
   def main(args: Array[String]): Unit = {
     val base = args.headOption.getOrElse("/root/repo/target/metascale")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.GraftSession.local(8, Some("ERROR"))
     val st = GraftStorage(spark)
     val fs = new Path(base).getFileSystem(
       spark.sparkContext.hadoopConfiguration)

@@ -58,6 +58,28 @@ class ContractSpec extends AnyFunSuite {
       s"confs set by code but unknown to this Spark (version drift): $unknown")
   }
 
+  test("SparkSession.builder() appears in src/main only inside GraftSession") {
+    // One session factory: a main that hand-builds its own session
+    // drifts from the configuration every other entry point and the
+    // test suites run (extensions, shuffle partitions, time zone,
+    // AQE). Scan the main tree for builder call sites outside doc
+    // comments and line comments.
+    import java.nio.file.{Files, Paths}
+    import scala.jdk.CollectionConverters._
+    val sites = Files.walk(Paths.get("src/main")).iterator().asScala
+      .filter(p => p.toString.endsWith(".scala"))
+      .flatMap { p =>
+        Files.readAllLines(p).asScala.zipWithIndex.collect {
+          case (line, i) if line.contains("SparkSession.builder()") &&
+              !line.trim.startsWith("*") && !line.trim.startsWith("//") =>
+            s"${p.getFileName}:${i + 1}"
+        }
+      }.toSeq
+    assert(sites.nonEmpty, "builder scan found no site — GraftSession moved?")
+    assert(sites.forall(_.startsWith("GraftSession.scala:")),
+      s"SparkSession built outside GraftSession: $sites")
+  }
+
   for (name <- Seq("scan_reads", "llm_knn", "stream_session", "win_rank",
     "join_asof_native", "llm_dedup_clusters", "sink_nested", "agg_pivot")) {
     test(s"query $name is deterministic across runs") {

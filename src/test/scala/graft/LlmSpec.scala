@@ -87,6 +87,30 @@ class LlmSpec extends AnyFunSuite {
   private def knnSet(df: org.apache.spark.sql.DataFrame): Set[(Long, Long)] =
     df.select($"qid", $"nid").as[(Long, Long)].collect().toSet
 
+  test("PQ codeword argmin: a distance past the packing bound fails " +
+    "loudly, distances up to it keep the lexicographic (dist, c) argmin") {
+    import llm.Knn.PqCodes
+    val bound = (Long.MaxValue - PqCodes) / PqCodes
+    def codes(rows: Seq[(Long, Int, Int, Long)]): Map[(Long, Int), Long] =
+      llm.Knn.pqArgmin(spark, rows.toDF("vec_id", "m", "c", "dl"))
+        .as[(Long, Int, Long)].collect()
+        .map { case (v, m, c) => (v, m) -> c }.toMap
+    // at the bound and just under it: the smallest dl wins, and a dl
+    // tie goes to the smaller code — the packed long does not wrap
+    assert(codes(Seq(
+      (0L, 0, 3, bound), (0L, 0, 1, bound), (0L, 0, 15, bound),
+      (1L, 0, 15, bound - 1), (1L, 0, 0, bound),
+      (2L, 1, 7, bound - 1), (2L, 1, 2, bound - 1), (2L, 1, 9, 0L))) ==
+      Map((0L, 0) -> 1L, (1L, 0) -> 15L, (2L, 1) -> 9L))
+    // one past it would wrap negative and win the min silently
+    val err = intercept[Exception] {
+      codes(Seq((0L, 0, 1, 5L), (0L, 0, 2, bound + 1)))
+    }
+    assert(Iterator.iterate[Throwable](err)(_.getCause)
+      .takeWhile(_ != null).exists(e => String.valueOf(e.getMessage)
+        .contains("would overflow a long")), err.toString)
+  }
+
   test("PQ knn recalls a useful fraction of brute-force neighbors") {
     val brute = knnSet(llm.Knn.knn(spark, SF))
     val pq = knnSet(llm.Knn.knnPq(spark, SF))

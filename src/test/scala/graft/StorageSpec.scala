@@ -2144,4 +2144,57 @@ class StorageSpec extends AnyFunSuite {
       .collect()(0).getLong(0)
     assert(n == 10)
   }
+
+  test("copy-on-write rewrites that lose the publish race throw, " +
+    "remove their own commit dir and leave the prior snapshot") {
+    import org.apache.hadoop.fs.Path
+    val st = sources.GraftStorage(spark)
+    /** Loses the next manifest publish under `table` once, as if a
+      * concurrent writer had just taken the version.
+      */
+    final class LoseOnce(table: String) extends GraftStorage.CommitPrimitive {
+      private val armed = new java.util.concurrent.atomic.AtomicBoolean(true)
+      override def putIfAbsent(fs: org.apache.hadoop.fs.FileSystem,
+          tmp: Path, dst: Path): Unit =
+        if (dst.toUri.getPath.startsWith(table) && armed.getAndSet(false)) {
+          fs.delete(tmp, false)
+          throw new java.util.ConcurrentModificationException(
+            s"injected lost race on $dst")
+        } else GraftStorage.LocalLinkPrimitive.putIfAbsent(fs, tmp, dst)
+    }
+    def table(name: String): String = {
+      val out = T.scratch(SF, name)
+      val p = new Path(out)
+      p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
+      st.writeVersioned(spark.range(0, 40)
+        .select($"id".as("k"), ($"id" * 2).as("v")).repartition(4), out)
+      out
+    }
+    def losesRace(out: String)(op: => Long): Unit = {
+      val before = st.listVersions(out).last
+      val rows = st.readVersioned(out).as[(Long, Long)].collect().toSet
+      val n = before + 1
+      def ownDirs = Option(new java.io.File(out, "data").listFiles())
+        .getOrElse(Array.empty[java.io.File])
+        .map(_.getName).filter(_.startsWith(s"c$n-")).toSeq
+      GraftStorage.registerCommitPrimitive("file", new LoseOnce(out))
+      try intercept[java.util.ConcurrentModificationException](op)
+      finally GraftStorage.registerCommitPrimitive("file",
+        GraftStorage.LocalLinkPrimitive)
+      assert(ownDirs.isEmpty, s"$out: staged dirs left behind: $ownDirs")
+      assert(st.listVersions(out).last == before)
+      assert(st.readVersioned(out).as[(Long, Long)].collect().toSet == rows)
+    }
+    val cw = table("lost_race_compact_where")
+    losesRace(cw)(st.compactVersionedWhere(cw, $"k" < 10))
+    val ad = table("lost_race_apply_deletes")
+    st.deleteVersionedMor(ad, $"k" % 3 === 0, "k")
+    losesRace(ad)(st.applyDeletesVersioned(ad))
+    val mg = table("lost_race_merge")
+    losesRace(mg)(st.mergeVersioned(mg,
+      Seq((5L, -5L), (100L, 100L)).toDF("k", "v"), "k"))
+    val up = table("lost_race_update")
+    losesRace(up)(st.updateVersioned(up, $"k" === 7L,
+      Map("v" -> lit(-7L))))
+  }
 }
